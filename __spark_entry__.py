@@ -366,19 +366,19 @@ def q_e1_logtype_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     regexp oracle.  Identical output by construction: event lines carry
     no 0x10/0x11 bytes, so escaping is the identity.
 
-    r7 (guide §4): the query keeps only (logtype, n_vars), so it uses the
-    split-pass-only UDF — classification, packing and all xxh64 ids were
-    computed and Arrow-shipped just to be thrown away (the full encode
-    stays covered by the headline pipeline + roundtrip gates + tests).
-    ``n_vars`` == ``size(var_kinds)`` by construction (one count per
-    grammar token)."""
-    from fluent_bit_clp_spark.functions.clp_pandas import clp_logtype_nvars_udf
+    r7 (guide §4): the query keeps only (logtype, n_vars), so the encode
+    UDF returns only those — a split pass with no classification or
+    packing (the full encode stays covered by the headline pipeline +
+    roundtrip gates + tests).  ``n_vars`` == ``size(var_kinds)`` by
+    construction (one count per grammar token)."""
+    from fluent_bit_clp_spark.functions.clp_pandas import clp_encode_udf
 
     ev = _parallel(
         _events(spark, sf_dir).select(*_LINE_COLS), "event_id"
     ).select("event_id", _line_col().alias("line"))
     enc = ev.select(
-        "event_id", clp_logtype_nvars_udf()(F.col("line")).alias("_e")
+        "event_id",
+        clp_encode_udf(cols=("logtype", "n_vars"))(F.col("line")).alias("_e"),
     )
     return enc.select(
         "event_id",
@@ -407,17 +407,18 @@ def q_e1_logtype_dict(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_e1_var_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 variable classification histogram — the PRODUCTION kind decision
-    (shared ``_classify_tok``) via the classify-only UDF, against an
-    independent SQL reclassification oracle.  Classify-only skips logtype
-    assembly / float packing / xxh64 ids the histogram throws away
-    (VERDICT r2 #3); the full encode path stays covered by
-    e1_logtype_extract and e1_encode_4byte."""
-    from fluent_bit_clp_spark.functions.clp_pandas import clp_var_kinds_udf
+    (shared ``_classify_tok``) via the encode UDF returning ``var_kinds``
+    only, against an independent SQL reclassification oracle.  The other
+    columns are never built or shipped (VERDICT r2 #3); the full encode
+    path stays covered by e1_logtype_extract and e1_encode_4byte."""
+    from fluent_bit_clp_spark.functions.clp_pandas import clp_encode_udf
 
     ev = _parallel(
         _events(spark, sf_dir).select(*_LINE_COLS), "event_id"
     ).select(_line_col().alias("line"))
-    kinds = ev.select(clp_var_kinds_udf()(F.col("line")).alias("var_kinds"))
+    kinds = ev.select(
+        clp_encode_udf(cols=("var_kinds",))(F.col("line")).alias("_e")
+    ).select(F.col("_e.var_kinds").alias("var_kinds"))
     # explode_outer + post-filter, NOT explode: a plain explode over a UDF
     # column pushes its implicit `size(arr)>0` pre-filter below the
     # projection AND the repartition exchange, re-evaluating the whole
@@ -444,13 +445,15 @@ def q_e1_encode_4byte(spark: SparkSession, sf_dir: str) -> DataFrame:
     (var_kinds, encoded_vars) since the histogram reads nothing else;
     kind/pack equality between the two implementations is pinned in
     tests/test_clp_4byte.py and tests/test_clp_core.py."""
-    from fluent_bit_clp_spark.functions.clp_pandas import clp_kinds_encoded_udf
+    from fluent_bit_clp_spark.functions.clp_pandas import clp_encode_udf
 
     ev = _parallel(
         _events(spark, sf_dir).select(*_LINE_COLS), "event_id"
     ).select(_line_col().alias("text"))
     enc = ev.select(
-        clp_kinds_encoded_udf("4byte")(F.col("text")).alias("_e")
+        clp_encode_udf("4byte", ("var_kinds", "encoded_vars"))(
+            F.col("text")
+        ).alias("_e")
     ).select(
         F.col("_e.var_kinds").alias("var_kinds"),
         F.col("_e.encoded_vars").alias("encoded_vars"),

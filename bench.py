@@ -78,28 +78,20 @@ def msgpack_mb_per_s_core(n_records: int = 20_000, reps: int = 4) -> float:
 
 def encode_rows_per_s_core(n_rows: int = 20_000, reps: int = 4) -> dict:
     """Single-core CLP-encode ceiling: rows/s through the production
-    ``_encode_batch`` (tokenize + classify + pack + memoized xxh64 ids).
-    Pure Python, no Spark — multiply by executor cores for the cluster
-    encode ceiling.
+    ``_encode_batch`` (tokenize + classify + pack).  The id columns are
+    Spark ``xxhash64`` expressions outside the kernel, so id hashing is
+    not in this number.  Pure Python, no Spark — multiply by executor
+    cores for the cluster encode ceiling.
 
-    Two CORPORA bracket the memoization benefit (review fix r5: a
-    single corpus with per-row-unique tokens floods the LRU, so its
-    "warm" pass measured the same ~2/3 hot-hit mix as cold — two nearly
-    identical numbers claiming to be a band):
-
-    - ``unique``: every line carries a per-row-unique dictionary token
-      and the id cache is cleared each rep — the no-cache-benefit lower
-      bound (≈ the un-memoized encoder);
-    - ``template``: the variable set is bounded well under the cache
-      size — the never-miss upper bound.  Real corpora sit between."""
+    Two CORPORA: ``unique`` (every line carries a per-row-unique
+    dictionary token) and ``template`` (the variable set is bounded
+    well under the token-cache size).  The classify cache is not
+    cleared between reps, so both passes run with a warm cache."""
     import time as _t
 
     import pandas as pd
 
-    from fluent_bit_clp_spark.functions.clp_pandas import (
-        _encode_batch,
-        _xxh64_cached,
-    )
+    from fluent_bit_clp_spark.functions.clp_pandas import _encode_batch
 
     unique = pd.Series([
         f"level=info user u{i % 97} fetched /api/v1/items/{i} "
@@ -114,7 +106,6 @@ def encode_rows_per_s_core(n_rows: int = 20_000, reps: int = 4) -> dict:
     _encode_batch(unique)  # warmup (excluded)
     lo = hi = float("inf")
     for _ in range(reps):
-        _xxh64_cached.cache_clear()
         t0 = _t.perf_counter()
         _encode_batch(unique)
         lo = min(lo, _t.perf_counter() - t0)

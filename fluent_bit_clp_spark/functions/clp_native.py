@@ -194,6 +194,25 @@ def _float4_unpack_sql(p: str) -> str:
     )
 
 
+def logtype_id_expr(col: str = "logtype") -> str:
+    """SQL expr: the template id, ``xxhash64(logtype)``, null-preserving
+    (xxhash64(NULL) is Spark's non-null seed hash, but null text must
+    keep a null id).  This and :func:`dict_var_ids_expr` are the one
+    place ids are hashed: the native encode, the pandas encode, the
+    archive reconstruction and the archive search dictionary all use
+    them, so their ids can never diverge."""
+    return (
+        f"case when {col} is null then cast(null as bigint) "
+        f"else xxhash64({col}) end"
+    )
+
+
+def dict_var_ids_expr(col: str = "dict_vars") -> str:
+    """SQL expr: ``xxhash64`` of each dictionary variable, null slots
+    (encoded variables) kept null — aligned with ``dict_vars``."""
+    return f"transform({col}, v -> case when v is not null then xxhash64(v) end)"
+
+
 def clp_encode(
     df: DataFrame, text_col: str = "text", mode: str = MODE_I64
 ) -> DataFrame:
@@ -256,23 +275,8 @@ def clp_encode(
             f"case when k = {KIND_DICT} then v end)"
         ),
     )
-    out = out.withColumn(
-        "dict_var_ids",
-        F.expr(
-            "transform(dict_vars, v -> case when v is not null then xxhash64(v) end)"
-        ),
-    )
-    out = out.withColumn(
-        "logtype_id",
-        # xxhash64(NULL) is Spark's non-null seed hash; null text must
-        # yield null logtype_id like the pandas twin (clp_pandas.py
-        # _encode_one: None text → all-None row) or the twins diverge on
-        # exactly the column the equality test used to skip
-        F.expr(
-            "case when logtype is null then cast(null as bigint) "
-            "else xxhash64(logtype) end"
-        ),
-    )
+    out = out.withColumn("dict_var_ids", F.expr(dict_var_ids_expr("dict_vars")))
+    out = out.withColumn("logtype_id", F.expr(logtype_id_expr("logtype")))
     return out.drop("_esc", "_vars")
 
 

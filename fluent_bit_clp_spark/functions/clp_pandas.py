@@ -6,21 +6,21 @@ semantically identical native-expression implementation in
 ``clp_native.py`` (1.32M vs 230k rows/s, 32 cores, 4M-row table), because
 Catalyst evaluates higher-order-function lambdas interpreted — outside
 whole-stage codegen — while this path is one Arrow batch transfer plus a
-CPython `re` scan per batch (plus a memoized xxh64: id inputs repeat
-heavily — ~88% cold-pass hit rate on the generated corpus, ~1.9× the
-un-memoized single-core encode there; corpora dominated by per-row-unique
-variables see proportionally less).  ``clp_native`` remains the oracle-checkable
-reference implementation (DuckDB can replay it), and the two are asserted
-field-for-field equal in tests.
+CPython `re` scan per batch.  Python computes only what needs Python —
+the template and the variables; the two id columns (``logtype_id``,
+``dict_var_ids``) are Spark ``xxhash64`` expressions shared with
+``clp_native`` and the archive layout, so ids are hashed in one place.
+``clp_native`` remains the oracle-checkable reference implementation
+(DuckDB can replay it), and the two are asserted field-for-field equal in
+tests.
 
 Both implementations share the exact token grammar (module constants are
 imported from ``clp_native``), so ``encode_native(x) == encode_pandas(x)``
-field-for-field — property-tested in ``tests/test_clp_pandas.py``.
+field-for-field — property-tested in ``tests/test_clp_core.py``.
 """
 
 from __future__ import annotations
 
-import functools as _functools
 import itertools as _itertools
 import re
 
@@ -45,6 +45,8 @@ from fluent_bit_clp_spark.functions.clp_native import (
     MODE_I64,
     PLACEHOLDER,
     VAR_TOKEN_RE,
+    dict_var_ids_expr,
+    logtype_id_expr,
 )
 
 _VAR = re.compile(VAR_TOKEN_RE)
@@ -68,108 +70,6 @@ _HAS_DIGIT = re.compile("[0-9]")
 # INT_RE / FLOAT_RE stay imported for re-export (oracle SQL builders use
 # the constants); their compiled forms were replaced by the string-op
 # _int_shape/_float_shape twins below.
-
-_ENCODE_SCHEMA = (
-    "logtype string, var_kinds array<int>, encoded_vars array<bigint>, "
-    "dict_vars array<string>, dict_var_ids array<bigint>, logtype_id bigint"
-)
-
-# ---------------------------------------------------------------------------
-# XXH64 (public xxHash spec), bit-exact with Spark's `xxhash64(string)`
-# (UTF-8 bytes, seed 42, result as signed i64) — verified against the JVM
-# implementation in tests/test_clp_core.py::test_python_xxh64_matches_spark.
-# Why in Python: Catalyst evaluates `transform(..., xxhash64)` interpreted
-# (~10 µs/element); here each id costs ~1-2 µs and rides the same Arrow
-# batch as the encode itself — and a multi-MiB turn with 10^5 variables no
-# longer creates a single-task straggler.
-
-_P1 = 0x9E3779B185EBCA87
-_P2 = 0xC2B2AE3D27D4EB4F
-_P3 = 0x165667B19E3779F9
-_P4 = 0x85EBCA77C2B2AE63
-_P5 = 0x27D4EB2F165667C5
-_M64 = (1 << 64) - 1
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
-
-
-def _round(acc: int, lane: int) -> int:
-    acc = (acc + lane * _P2) & _M64
-    return (_rotl(acc, 31) * _P1) & _M64
-
-
-def _merge_round(acc: int, val: int) -> int:
-    acc ^= _round(0, val)
-    return (acc * _P1 + _P4) & _M64
-
-
-def xxh64(data: bytes, seed: int = 42) -> int:
-    n = len(data)
-    if n >= 32:
-        v1 = (seed + _P1 + _P2) & _M64
-        v2 = (seed + _P2) & _M64
-        v3 = seed & _M64
-        v4 = (seed - _P1) & _M64
-        i = 0
-        for i in range(0, n - 31, 32):
-            v1 = _round(v1, int.from_bytes(data[i : i + 8], "little"))
-            v2 = _round(v2, int.from_bytes(data[i + 8 : i + 16], "little"))
-            v3 = _round(v3, int.from_bytes(data[i + 16 : i + 24], "little"))
-            v4 = _round(v4, int.from_bytes(data[i + 24 : i + 32], "little"))
-        i += 32
-        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M64
-        h = _merge_round(h, v1)
-        h = _merge_round(h, v2)
-        h = _merge_round(h, v3)
-        h = _merge_round(h, v4)
-    else:
-        h = (seed + _P5) & _M64
-        i = 0
-    h = (h + n) & _M64
-    while i + 8 <= n:
-        h ^= _round(0, int.from_bytes(data[i : i + 8], "little"))
-        h = (_rotl(h, 27) * _P1 + _P4) & _M64
-        i += 8
-    if i + 4 <= n:
-        h ^= (int.from_bytes(data[i : i + 4], "little") * _P1) & _M64
-        h = (_rotl(h, 23) * _P2 + _P3) & _M64
-        i += 4
-    while i < n:
-        h ^= (data[i] * _P5) & _M64
-        h = (_rotl(h, 11) * _P1) & _M64
-        i += 1
-    h ^= h >> 33
-    h = (h * _P2) & _M64
-    h ^= h >> 29
-    h = (h * _P3) & _M64
-    h ^= h >> 32
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
-@_functools.lru_cache(maxsize=16384)
-def _xxh64_cached(s: str) -> int:
-    return xxh64(s.encode("utf-8"))
-
-
-def _xxh64_str(s: str) -> int:
-    # pure-Python xxh64 is the encoder's single biggest cost, and its
-    # inputs repeat heavily (a handful of logtype templates hashed once
-    # per ROW; low-cardinality dict vars): memoizing short strings
-    # removes most of it (~88% cold-pass hit rate on the generated
-    # corpus).  The threshold counts CHARACTERS, so the per-worker
-    # worst case is 16384 × ≤1024 chars ≤ 4 KiB utf-8 ≈ 64 MiB of
-    # pinned keys on a pathological all-unique near-threshold corpus —
-    # bounded even × one Python worker per core (review fix r5: the
-    # first cut allowed ~1 GiB/worker).  Typical templates/vars are
-    # far under the threshold; longer values hash uncached.  Pure
-    # function, per-process cache — ids stay deterministic across
-    # partitions/resume.
-    if len(s) <= 1024:
-        return _xxh64_cached(s)
-    return xxh64(s.encode("utf-8"))
-
 
 def _pack_float(tok: str) -> int:
     digits = tok.replace("-", "").replace(".", "")
@@ -239,8 +139,8 @@ def _float_shape(tok: str) -> bool:
 
 
 def _classify_tok(tok: str, fourbyte: bool) -> int:
-    """The single kind-decision function — shared by the full encoder and
-    the classify-only path so the two can never diverge."""
+    """The single kind-decision function — shared by the per-row and the
+    batch encoder so the two can never diverge."""
     if _int_shape(tok) and (not fourbyte or INT32_MIN <= int(tok) <= INT32_MAX):
         return KIND_INT
     if _float_shape(tok) and _float_ok(tok, fourbyte):
@@ -280,96 +180,6 @@ def _encode_one(text: str | None, mode: str = MODE_I64):
     return "".join(out), kinds, encoded, dicts
 
 
-def _classify_one(text: str | None, mode: str = MODE_I64):
-    """var_kinds only — skips logtype assembly, float packing and all
-    xxh64 id hashing (VERDICT r2 #3: running the full encode to keep one
-    column doubled the histogram query's cost)."""
-    if text is None:
-        return None
-    fourbyte = mode == MODE_4BYTE
-    esc = text.replace(ESCAPE, ESCAPE + "e").replace(PLACEHOLDER, ESCAPE + "p")
-    return [_classify_tok(m.group(0), fourbyte) for m in _VAR.finditer(esc)]
-
-
-def _kinds_batch(texts: pd.Series, mode: str = MODE_I64) -> pd.Series:
-    """Batch twin of :func:`_classify_one` (equivalence pinned in
-    tests/test_clp_core.py): one split pass per row + one flat cached
-    classify comprehension instead of an uncached finditer/classify per
-    occurrence."""
-    fourbyte = mode == MODE_4BYTE
-    _, toks_rows, n = _split_rows(texts)
-    infos = _flat_infos(toks_rows, fourbyte)
-    kinds_flat = [i[0] for i in infos]
-    out: list = [None] * n
-    o = 0
-    for j, tk in enumerate(toks_rows):
-        if tk is None:
-            continue
-        e = o + len(tk)
-        out[j] = kinds_flat[o:e]
-        o = e
-    return pd.Series(out, dtype="object")
-
-
-def _kinds_encoded_batch(texts: pd.Series, mode: str = MODE_I64) -> pd.DataFrame:
-    """(var_kinds, encoded_vars) only — skips logtype assembly, dict-var
-    collection and all xxh64 ids (guide §4: return only the columns the
-    consumer reads; the arrays of ids/strings were the bulk of the Arrow
-    return traffic for kind-histogram consumers)."""
-    fourbyte = mode == MODE_4BYTE
-    _, toks_rows, n = _split_rows(texts)
-    infos = _flat_infos(toks_rows, fourbyte)
-    kinds_flat = [i[0] for i in infos]
-    encs_flat = [i[1] for i in infos]
-    kinds_col: list = [None] * n
-    encs_col: list = [None] * n
-    o = 0
-    for j, tk in enumerate(toks_rows):
-        if tk is None:
-            continue
-        e = o + len(tk)
-        kinds_col[j] = kinds_flat[o:e]
-        encs_col[j] = encs_flat[o:e]
-        o = e
-    return pd.DataFrame(
-        {
-            "var_kinds": pd.Series(kinds_col, dtype="object"),
-            "encoded_vars": pd.Series(encs_col, dtype="object"),
-        }
-    )
-
-
-def _logtype_nvars_batch(texts: pd.Series) -> pd.DataFrame:
-    """(logtype, n_vars) only — the cheapest useful view of the token
-    grammar: one split pass, no classification, no packing, no hashing.
-    ``n_vars`` equals ``size(var_kinds)`` of the full encode by
-    construction (tokens are the odd split indices)."""
-    split = _VAR_SPLIT.split
-    join = PLACEHOLDER.join
-    has_digit = _HAS_DIGIT.search
-    lts: list = []
-    ns: list = []
-    for t in texts:
-        if t is None:
-            lts.append(None)
-            ns.append(None)
-            continue
-        esc = t.replace(ESCAPE, ESCAPE + "e").replace(PLACEHOLDER, ESCAPE + "p")
-        if has_digit(esc) is None:
-            lts.append(esc)
-            ns.append(0)
-            continue
-        parts = split(esc)
-        lts.append(join(parts[0::2]))
-        ns.append(len(parts) // 2)
-    return pd.DataFrame(
-        {
-            "logtype": pd.Series(lts, dtype="object"),
-            "n_vars": pd.array(ns, dtype="Int64"),
-        }
-    )
-
-
 def _float_ok(tok: str, fourbyte: bool) -> bool:
     digits = tok.replace("-", "").replace(".", "")
     if fourbyte:
@@ -381,8 +191,7 @@ def _float_ok(tok: str, fourbyte: bool) -> bool:
 
 
 # Plain-dict token caches, one per mode: an lru_cache HIT costs ~1 µs of
-# C-wrapper/key-tuple overhead per call; a dict .get() is ~20× cheaper
-# (the same round-6 finding that moved the id cache off lru_cache).
+# C-wrapper/key-tuple overhead per call; a dict .get() is ~20× cheaper.
 # Bounded: ≤ 65536 entries of ≤256-char keys ≈ ≤16 MiB per worker per
 # mode; no eviction — a full cache simply stops admitting (token
 # vocabularies are log templates' variable values, far under the cap in
@@ -392,8 +201,8 @@ _TOK_CACHE_MAX_ENTRIES = 65536
 
 
 def _tok_compute(tok: str, fourbyte: bool):
-    """(kind, encoded, dict_tok) for one token — the single classify+pack
-    decision shared by every batch path."""
+    """(kind, encoded, dict_tok) for one token — the batch encoder's
+    classify+pack decision."""
     k = _classify_tok(tok, fourbyte)
     if k == KIND_INT:
         return KIND_INT, int(tok), None
@@ -409,62 +218,11 @@ def _tok_cache_miss(tok: str, fourbyte: bool, cache: dict):
     return info
 
 
-def _tok_info(tok: str, fourbyte: bool):
-    """Per-token entry point kept for the scalar paths (_encode_one twin
-    tests); batch paths inline the cache lookup instead."""
-    cache = _TOK_CACHE[1 if fourbyte else 0]
-    info = cache.get(tok)
-    if info is not None:
-        return info
-    return _tok_cache_miss(tok, fourbyte, cache)
-
-
-# Plain-dict id cache for the batch encoder: an lru_cache HIT costs ~1.5 µs
-# of C-wrapper overhead per call, which at ~5 ids/row was the profiled #1
-# encode cost after round 5 — a dict .get() is ~20× cheaper, and the
-# misses are batch-hashed vectorized (xxh64_np).  Bounded by a BYTE
-# budget (64 MiB of key chars per worker) rather than an entry cap so
-# multi-KiB logtypes — hashed once per ROW without caching — stay
-# cacheable while a flood of unique long strings still can't pin
-# unbounded memory.
-_ID_CACHE: dict[str, int] = {}
-_ID_CACHE_BYTES = [0]
-_ID_CACHE_BYTE_BUDGET = 64 << 20
-# Entry cap alongside the byte budget (ADVICE r6: the byte budget counts
-# only key characters, so millions of tiny keys could pin ~100 B/entry of
-# dict overhead — multiple GiB — while staying under the byte budget).
-_ID_CACHE_MAX_ENTRIES = 1_000_000
-
-
-def _batch_ids(strs: list[str]) -> dict[str, int]:
-    """Ensure every string in ``strs`` is id-resolvable; batch-hash the
-    cache misses in one vectorized shot.  Returns the per-call overflow
-    dict for strings the bounded global cache refused."""
-    missing = sorted({s for s in strs if s not in _ID_CACHE})
-    if not missing:
-        return {}
-    from fluent_bit_clp_spark.functions.xxh64_np import xxh64_batch_strs
-
-    overflow = {}
-    used = _ID_CACHE_BYTES
-    for s, h in zip(missing, xxh64_batch_strs(missing)):
-        h = int(h)
-        if (
-            used[0] + len(s) <= _ID_CACHE_BYTE_BUDGET
-            and len(_ID_CACHE) < _ID_CACHE_MAX_ENTRIES
-        ):
-            _ID_CACHE[s] = h
-            used[0] += len(s)
-        else:
-            overflow[s] = h
-    return overflow
-
-
 _NO_TOKS: list = []
 
 
 def _split_rows(texts) -> tuple[list, list, int]:
-    """Shared tokenize pass: per row, escape + ONE split-with-capture →
+    """Tokenize pass: per row, escape + ONE split-with-capture →
     (logtype list, per-row token lists — None rows keep None in both).
     Digit-free rows (no possible variable token) skip the split via the
     ``_HAS_DIGIT`` probe."""
@@ -503,70 +261,68 @@ def _flat_infos(toks_rows: list, fourbyte: bool) -> list:
     return [cache_get(tok) or miss(tok, fourbyte, cache) for tok in flat]
 
 
-def _encode_batch(texts: pd.Series, mode: str = MODE_I64) -> pd.DataFrame:
+# Every column the encode kernel can return, with its Spark DDL type.  The
+# UDF schema is built from this table, so a kernel column and its declared
+# type cannot drift apart.  ``n_vars`` (== ``size(var_kinds)``) serves the
+# template view, which needs no classification.
+_ENCODE_TYPES = {
+    "logtype": "string",
+    "var_kinds": "array<int>",
+    "encoded_vars": "array<bigint>",
+    "dict_vars": "array<string>",
+    "n_vars": "bigint",
+}
+ENCODE_COLS = ("logtype", "var_kinds", "encoded_vars", "dict_vars")
+# position of each per-variable column in a ``_tok_compute`` tuple
+_TOK_FIELD = {"var_kinds": 0, "encoded_vars": 1, "dict_vars": 2}
+
+
+def _encode_batch(
+    texts: pd.Series, mode: str = MODE_I64, cols: tuple = ENCODE_COLS
+) -> pd.DataFrame:
     """Batch twin of :func:`_encode_one` (equivalence pinned in
-    tests/test_clp_core.py).  r7 shape: ONE C-level split-with-capture
-    pass per row yields literals and tokens together (replacing the r6
-    sub+findall double scan); classification runs as a single
-    comprehension over the batch's flattened token stream through the
-    plain-dict ``_TOK_CACHE``; per-row arrays are O(1) slices of the flat
-    kind/enc/dict/id streams; all dict/logtype ids resolve through
-    ``_ID_CACHE`` + one vectorized xxh64 pass over the batch's unique
-    misses."""
-    fourbyte = mode == MODE_4BYTE
+    tests/test_clp_core.py and tests/test_clp_batch_light.py), returning
+    only ``cols``.  ONE C-level split-with-capture pass per row yields
+    literals and tokens together; when a per-variable column is asked
+    for, classification runs as a single comprehension over the batch's
+    flattened token stream through the plain-dict ``_TOK_CACHE``, and
+    per-row arrays are O(1) slices of the flat stream.  ``logtype`` /
+    ``n_vars`` alone skip classification entirely.  Ids are not computed
+    here: Spark hashes them (``clp_native.logtype_id_expr`` /
+    ``dict_var_ids_expr``)."""
     lt_col, toks_rows, n = _split_rows(texts)
-    infos = _flat_infos(toks_rows, fourbyte)
-    kinds_flat = [i[0] for i in infos]
-    encs_flat = [i[1] for i in infos]
-    dicts_flat = [i[2] for i in infos]
-    need_ids = [d for d in dicts_flat if d is not None]
-    need_ids.extend(lt for lt in lt_col if lt is not None)
-    overflow = _batch_ids(need_ids)
-    get_id = _ID_CACHE.get
-    if overflow:
-        def rid(s, _g=get_id, _o=overflow):
-            v = _g(s)
-            return v if v is not None else _o[s]
-    else:
-        rid = get_id  # every need_ids string was admitted to the cache
-    ids_flat = [None if d is None else rid(d) for d in dicts_flat]
-    kinds_col: list = [None] * n
-    encs_col: list = [None] * n
-    dicts_col: list = [None] * n
-    ids_col: list = [None] * n
-    ltid_col: list = [None] * n
-    o = 0
-    for j, tk in enumerate(toks_rows):
-        if tk is None:
-            continue
-        e = o + len(tk)
-        kinds_col[j] = kinds_flat[o:e]
-        encs_col[j] = encs_flat[o:e]
-        dicts_col[j] = dicts_flat[o:e]
-        ids_col[j] = ids_flat[o:e]
-        ltid_col[j] = rid(lt_col[j])
-        o = e
-    # logtype_id is the one SCALAR int column: pandas coerces int+None
-    # rows to float64, silently rounding |id| > 2^53 for EVERY row in any
-    # batch that contains a null text (and making the stored id depend on
-    # batch composition — breaking the hash-stability contract).  The
-    # array columns are object-dtype lists and convert exactly; pin the
-    # scalar to nullable Int64 so Arrow gets exact 64-bit values.
-    return pd.DataFrame(
-        {
-            "logtype": pd.Series(lt_col, dtype="object"),
-            "var_kinds": pd.Series(kinds_col, dtype="object"),
-            "encoded_vars": pd.Series(encs_col, dtype="object"),
-            "dict_vars": pd.Series(dicts_col, dtype="object"),
-            "dict_var_ids": pd.Series(ids_col, dtype="object"),
-            "logtype_id": pd.array(ltid_col, dtype="Int64"),
-        }
-    )
+    out: dict = {}
+    if "logtype" in cols:
+        out["logtype"] = pd.Series(lt_col, dtype="object")
+    if "n_vars" in cols:
+        # nullable Int64: a None row must not coerce the column to float64
+        out["n_vars"] = pd.array(
+            [None if tk is None else len(tk) for tk in toks_rows], dtype="Int64"
+        )
+    var_cols = [c for c in cols if c in _TOK_FIELD]
+    if var_cols:
+        infos = _flat_infos(toks_rows, mode == MODE_4BYTE)
+        rows = [j for j, tk in enumerate(toks_rows) if tk is not None]
+        ends = list(_itertools.accumulate(len(toks_rows[j]) for j in rows))
+        spans = list(zip(rows, [0, *ends[:-1]], ends))
+        for c in var_cols:
+            f = _TOK_FIELD[c]
+            flat = [i[f] for i in infos]
+            col: list = [None] * n
+            for j, o, e in spans:
+                col[j] = flat[o:e]
+            out[c] = pd.Series(col, dtype="object")
+    return pd.DataFrame({c: out[c] for c in cols})
 
 
-def clp_encode_udf(mode: str = MODE_I64, deterministic: bool = True):
-    """Built lazily — @pandas_udf parses its DDL schema against the active
-    SparkSession, so module-import-time construction would fail.
+def clp_encode_udf(
+    mode: str = MODE_I64, cols: tuple = ENCODE_COLS, deterministic: bool = True
+):
+    """The one encode UDF: a struct of ``cols`` (any subset of
+    ``_ENCODE_TYPES``, in the order given) — consumers ship across the
+    Arrow boundary only the columns they read.  Built lazily:
+    @pandas_udf parses its DDL schema against the active SparkSession, so
+    module-import-time construction would fail.
 
     ``deterministic=False`` (guide §4.4): the encode IS a pure function,
     but consumers that FILTER on its output (search's prune predicates /
@@ -575,33 +331,9 @@ def clp_encode_udf(mode: str = MODE_I64, deterministic: bool = True):
     exchange, serializing the encode into the scan task (measured on
     e1_search: the entire encode+verify ran in ONE task).  Values are
     identical either way."""
-    udf = pandas_udf(lambda s: _encode_batch(s, mode), _ENCODE_SCHEMA)
+    ddl = ", ".join(f"{c} {_ENCODE_TYPES[c]}" for c in cols)
+    udf = pandas_udf(lambda s: _encode_batch(s, mode, cols), ddl)
     return udf if deterministic else udf.asNondeterministic()
-
-
-def clp_var_kinds_udf(mode: str = MODE_I64):
-    """Classify-only UDF: array<int> of var kinds per row, via the exact
-    production token grammar + kind decision (shared ``_classify_tok``,
-    batch path ``_kinds_batch`` — r7: cached per-unique-token classify
-    instead of an uncached finditer per occurrence)."""
-    return pandas_udf(lambda s: _kinds_batch(s, mode), "array<int>")
-
-
-def clp_kinds_encoded_udf(mode: str = MODE_I64):
-    """(var_kinds, encoded_vars)-only UDF — for consumers that never read
-    the logtype/dict columns (guide §4: ship only what the consumer
-    needs across the Arrow boundary)."""
-    return pandas_udf(
-        lambda s: _kinds_encoded_batch(s, mode),
-        "var_kinds array<int>, encoded_vars array<bigint>",
-    )
-
-
-def clp_logtype_nvars_udf():
-    """(logtype, n_vars)-only UDF — the template-extraction view: no
-    classification, no packing, no ids; ``n_vars`` ==
-    ``size(var_kinds)`` of the full encode by construction."""
-    return pandas_udf(_logtype_nvars_batch, "logtype string, n_vars bigint")
 
 
 def _decode_one(logtype, kinds, encoded, dicts, mode: str = MODE_I64) -> str | None:
@@ -650,21 +382,22 @@ def clp_encode_pandas(
     mode: str = MODE_I64,
     deterministic: bool = True,
 ) -> DataFrame:
-    """Append encoding columns via the Arrow-batched pandas UDF path.
+    """Append the working-layout encoding columns: the four encode columns
+    via the Arrow-batched pandas UDF, then ``dict_var_ids`` / ``logtype_id``
+    as native Spark expressions (the same ones :func:`clp_native.clp_encode`
+    and ``archive.from_archive`` use).  A consumer that never reads the
+    ids — e.g. ``archive.to_archive`` — has them pruned by Catalyst.
     ``deterministic=False``: see :func:`clp_encode_udf` — pass it when
     the caller filters on encode outputs downstream of a repartition."""
     out = df.withColumn(
-        "_enc", clp_encode_udf(mode, deterministic)(F.col(text_col))
+        "_enc", clp_encode_udf(mode, deterministic=deterministic)(F.col(text_col))
     )
-    return out.select(
-        "*",
-        F.col("_enc.logtype").alias("logtype"),
-        F.col("_enc.var_kinds").alias("var_kinds"),
-        F.col("_enc.encoded_vars").alias("encoded_vars"),
-        F.col("_enc.dict_vars").alias("dict_vars"),
-        F.col("_enc.dict_var_ids").alias("dict_var_ids"),
-        F.col("_enc.logtype_id").alias("logtype_id"),
+    out = out.select(
+        "*", *[F.col(f"_enc.{c}").alias(c) for c in ENCODE_COLS]
     ).drop("_enc")
+    return out.withColumn(
+        "dict_var_ids", F.expr(dict_var_ids_expr("dict_vars"))
+    ).withColumn("logtype_id", F.expr(logtype_id_expr("logtype")))
 
 
 def clp_decode_pandas(

@@ -15,7 +15,10 @@ without re-parsing the template — but it is wasteful for *storage*:
   where the reference delegates to that encoding),
 - ``dict_var_ids`` is 8 *high-entropy* (zstd-incompressible) bytes per
   dictionary variable, recomputable as ``xxhash64(dict_var)``,
-- ``logtype_id`` is likewise ``xxhash64(logtype)``,
+- ``logtype_id`` is likewise ``xxhash64(logtype)`` — both are Spark
+  expressions in every encoder (``clp_native.dict_var_ids_expr`` /
+  ``logtype_id_expr``), so when ``to_archive`` drops them Catalyst prunes
+  their computation and they are never hashed on the way to storage,
 - the aligned ``encoded_vars`` / ``dict_vars`` arrays carry a null slot
   for every variable of the *other* family (definition-level overhead in
   parquet).
@@ -34,8 +37,9 @@ without re-parsing the template — but it is wasteful for *storage*:
 - ``var_kinds``, ``dict_var_ids``, ``logtype_id``: gone.
 
 ``from_archive`` is the exact inverse: it re-derives the three dropped
-columns and re-nulls the arrays back into alignment, byte-identical to
-what `clp_encode` produced (pinned in tests/test_archive.py, and in the
+columns (the ids through the same two shared expressions) and re-nulls
+the arrays back into alignment, byte-identical to what `clp_encode`
+produced (pinned in tests/test_archive.py, and in the
 driver gate as the "archive" leg of ``pipeline_roundtrip_violations``).
 
 Everything is native Spark SQL (whole-stage codegen, no Python).  The
@@ -56,7 +60,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.clp_native import KIND_DICT, KIND_FLOAT, KIND_INT, PLACEHOLDER
+from ..functions.clp_native import (
+    KIND_DICT,
+    KIND_FLOAT,
+    KIND_INT,
+    PLACEHOLDER,
+    dict_var_ids_expr,
+    logtype_id_expr,
+)
 
 # Kind-specific placeholder bytes (0x11 keeps its meaning for int vars, so
 # an all-int archive template is byte-identical to the working layout).
@@ -172,16 +183,6 @@ def untyped_logtype_expr(col: str = "logtype") -> str:
     )
 
 
-def logtype_id_expr(col: str = "logtype") -> str:
-    """SQL expr: null-preserving xxhash64 template id (xxhash64(NULL) is
-    Spark's non-null seed hash; the encode layout keeps null ids for
-    null text).  Shared for the same never-diverge reason."""
-    return (
-        f"case when {col} is null then cast(null as bigint) "
-        f"else xxhash64({col}) end"
-    )
-
-
 def to_archive(encoded: DataFrame) -> DataFrame:
     """Working encode layout → columnar archive layout (see module doc).
 
@@ -257,12 +258,6 @@ def from_archive(archive: DataFrame) -> DataFrame:
         .withColumn("dict_vars", F.expr("transform(_merged, s -> s.dv)"))
         .drop("_merged")
         .withColumn("logtype", F.expr(untyped))
-        .withColumn(
-            "dict_var_ids",
-            F.expr(
-                "transform(dict_vars, v -> "
-                "case when v is not null then xxhash64(v) end)"
-            ),
-        )
+        .withColumn("dict_var_ids", F.expr(dict_var_ids_expr("dict_vars")))
         .withColumn("logtype_id", F.expr(logtype_id_expr("logtype")))
     )

@@ -1,25 +1,19 @@
-"""Tag-keyed fan-out routing + skew-aware ordering (SURVEY.md §2.4).
+"""Tag-keyed fan-out routing (SURVEY.md §2.4).
 
 Mirrors the reference's per-tag stream dispatch
 (`/root/reference/internal/outctx/context.go:134-146`,
 `/root/reference/plugins/out_clp_s3_v2/internal/ingestion.go:29-43`): each
-record is routed to exactly one sink; per-stream arrival order in the
+record is routed to exactly one sink.  Per-stream arrival order in the
 reference (`internal/outctx/context.go:39-43`) becomes an explicit
-``(conv_id, turn_idx)`` ordering restored inside salted partitions.
-
-Skew stance (SURVEY.md §7 M3): conversations are Zipf-skewed, so hashing
-on ``conv_id`` alone leaves hot-conversation partitions unbounded.  We
-sub-salt by *turn block* — ``floor(turn_idx / split_turns)`` — which keeps
-whole turn-ranges together (ordering is restorable per block) while
-bounding any single partition's share of a hot conversation.
+``(conv_id, turn_idx)`` ordering carried by the chunk-offset windows of
+``operators/chunk.assign_chunks``, whose ``(sink, conv_id, turn-block)``
+window key also bounds how much of a hot conversation one task holds.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-DEFAULT_SPLIT_TURNS = 4096
 
 
 def sink_column() -> Column:
@@ -36,32 +30,3 @@ def sink_column() -> Column:
 
 def with_sink(df: DataFrame) -> DataFrame:
     return df.withColumn("sink", sink_column())
-
-
-def salted_repartition(
-    df: DataFrame,
-    num_partitions: int | None = None,
-    split_turns: int = DEFAULT_SPLIT_TURNS,
-) -> DataFrame:
-    """Skew-aware repartition preserving restorable per-conversation order.
-
-    Salt = turn block, so a hot conversation spreads over
-    ``ceil(n_turns / split_turns)`` partitions instead of one; rows are then
-    sorted ``(conv_id, turn_idx)`` inside each partition so any
-    per-partition consumer (encoder, writer) sees stable order.
-    """
-    salt = F.floor(F.col("turn_idx") / F.lit(split_turns)).alias("_salt")
-    parts = [F.col("conv_id"), salt]
-    out = (
-        df.repartition(num_partitions, *parts)
-        if num_partitions
-        else df.repartition(*parts)
-    )
-    return out.sortWithinPartitions("conv_id", "turn_idx")
-
-
-def routed_counts(df: DataFrame) -> DataFrame:
-    """Per-sink routed-row counts — the north_rule correctness aggregate
-    (A1 analogue: `internal/irzstd/writer.go:74-87` event counters).
-    Partial aggregation map-side; shuffles only #sinks rows per task."""
-    return df.groupBy("sink").agg(F.count("*").alias("routed_rows"))

@@ -39,6 +39,7 @@ from fluent_bit_clp_spark.functions.clp_native import (
     MODE_I64,
     PLACEHOLDER,
     clp_decode_column,
+    logtype_id_expr,
 )
 from fluent_bit_clp_spark.functions.clp_pandas import _encode_one
 
@@ -182,7 +183,8 @@ def compile_var_predicates(
     representation — so enumeration collapses to one predicate per token:
 
     - encoded int/float token → ``array_contains(encoded_vars, packed)``
-    - dictionary token        → ``array_contains(dict_var_ids, xxh64(tok))``
+    - dictionary token        → ``array_contains(dict_var_ids, xxhash64(tok))``
+      (the literal's hash is constant-folded by Catalyst)
 
     Only *unambiguous* tokens compile (not adjacent to a ``*``: a fragment
     like ``container-*`` may extend into a longer data token).  Soundness:
@@ -212,8 +214,6 @@ def compile_var_predicates(
     provably no match; over ``max_ids`` or without a dictionary the
     token's predicate is skipped (sound: decode-verify follows).
     """
-    from fluent_bit_clp_spark.functions.clp_pandas import _xxh64_str
-
     parts = query.replace("?", "*").split("*")
     preds = []
     for i, part in enumerate(parts):
@@ -256,7 +256,7 @@ def compile_var_predicates(
                     )
                 else:
                     preds.append(
-                        F.array_contains("dict_var_ids", F.lit(_xxh64_str(d)))
+                        F.array_contains("dict_var_ids", F.xxhash64(F.lit(d)))
                     )
             else:
                 preds.append(F.array_contains("encoded_vars", F.lit(e)))
@@ -631,10 +631,7 @@ def archive_logtype_dictionary(archive: DataFrame) -> DataFrame:
     same template expressions ``from_archive`` uses (kinds live only in
     the stored template, so this dict is not derivable from the working
     logtype_dict)."""
-    from fluent_bit_clp_spark.operators.archive import (
-        logtype_id_expr,
-        untyped_logtype_expr,
-    )
+    from fluent_bit_clp_spark.operators.archive import untyped_logtype_expr
 
     stored = (
         archive.select(F.col("logtype").alias("logtype_stored"))

@@ -166,8 +166,11 @@ def encode_pipeline(
     rows/s on 32 cores, 4M-row table) because Catalyst evaluates
     higher-order-function lambdas interpreted, outside whole-stage codegen,
     while the UDF is one Arrow batch transfer + CPython `re` per batch.
-    The native path remains the oracle-checkable reference implementation
-    (equality property-tested in tests/test_clp_core.py).
+    The UDF returns only the four encode columns; ``logtype_id`` and
+    ``dict_var_ids`` are Spark ``xxhash64`` expressions on top of it, so
+    a consumer that drops them (``archive.to_archive``) never computes
+    them.  The native path remains the oracle-checkable reference
+    implementation (equality property-tested in tests/test_clp_core.py).
     """
     out = parse_normalize(df)
     out = enrich(out, spark)

@@ -146,6 +146,39 @@ def test_archive_plan_stays_native(spark):
     assert "Python" not in plan and "Arrow" not in plan
 
 
+def test_archive_ingest_never_hashes_ids(spark):
+    """The encode UDF returns only the four encode columns; the two id
+    columns are Spark expressions on top of it, so the archive layout —
+    which drops them — never computes them: no ``xxhash64`` anywhere in
+    the optimized ingest plan.  (Input is a local relation: datagen
+    itself hashes row ids.)"""
+    import json
+
+    from fluent_bit_clp_spark.datagen import transcripts
+    from fluent_bit_clp_spark.plans.pipeline import encode_pipeline
+
+    tr = transcripts(spark, 200)
+    df = spark.createDataFrame(tr.collect(), tr.schema)
+    opt = to_archive(encode_pipeline(df, spark))._jdf.queryExecution().optimizedPlan()
+    assert "xxhash64" not in opt.toString().lower()
+
+    def python_udfs(node):
+        if isinstance(node, dict):
+            if node.get("class", "").endswith(".PythonUDF"):
+                yield node
+            for v in node.values():
+                yield from python_udfs(v)
+        elif isinstance(node, list):
+            for v in node:
+                yield from python_udfs(v)
+
+    udfs = list(python_udfs(json.loads(opt.toJSON())))
+    assert len(udfs) == 1
+    assert [f["name"] for f in udfs[0]["dataType"]["fields"]] == [
+        "logtype", "var_kinds", "encoded_vars", "dict_vars"
+    ]
+
+
 def test_compact_archive_clusters_and_preserves_rows(spark, tmp_path):
     """compact_archive (template clustering): same multiset of rows,
     smaller parquet+zstd footprint, and tight per-row-group logtype

@@ -1,8 +1,7 @@
-"""r7 optimization round: the light batch paths (kinds-only,
-kinds+encoded-only, logtype+n_vars-only) and the string-op token
-classifier must be EXACT twins of the reference per-row functions — these
-are the paths the driver queries e1_var_classes / e1_encode_4byte /
-e1_logtype_extract now ride."""
+"""The batch encoder, for every column subset a consumer asks for, and the
+string-op token classifier must be EXACT twins of the reference per-row
+functions — the column subsets are what the driver queries
+e1_var_classes / e1_encode_4byte / e1_logtype_extract ride."""
 
 from __future__ import annotations
 
@@ -21,13 +20,11 @@ from fluent_bit_clp_spark.functions.clp_native import (
     VAR_TOKEN_RE,
 )
 from fluent_bit_clp_spark.functions.clp_pandas import (
-    _classify_one,
+    ENCODE_COLS,
+    _encode_batch,
     _encode_one,
     _float_shape,
     _int_shape,
-    _kinds_batch,
-    _kinds_encoded_batch,
-    _logtype_nvars_batch,
 )
 
 _INT_RX = re.compile(INT_RE)
@@ -79,35 +76,38 @@ def test_fast_token_regex_equals_original(text):
     assert orig == fast, text
 
 
-@pytest.mark.parametrize("mode", [MODE_I64, MODE_4BYTE])
-@settings(max_examples=40, deadline=None)
-@given(texts=TEXTS)
-def test_kinds_batch_equals_classify_one(mode, texts):
-    got = _kinds_batch(pd.Series(texts, dtype=object), mode)
-    for i, t in enumerate(texts):
-        assert got[i] == _classify_one(t, mode), (i, t)
+COL_SUBSETS = [
+    ("logtype", "n_vars"),
+    ("n_vars",),
+    ("var_kinds",),
+    ("var_kinds", "encoded_vars"),
+    ("dict_vars", "logtype"),
+    ENCODE_COLS,
+]
 
 
 @pytest.mark.parametrize("mode", [MODE_I64, MODE_4BYTE])
+@pytest.mark.parametrize("cols", COL_SUBSETS, ids="+".join)
 @settings(max_examples=40, deadline=None)
 @given(texts=TEXTS)
-def test_kinds_encoded_batch_equals_encode_one(mode, texts):
-    got = _kinds_encoded_batch(pd.Series(texts, dtype=object), mode)
+def test_encode_batch_cols_equal_encode_one(cols, mode, texts):
+    """``_encode_batch(texts, mode, cols)`` returns exactly ``cols``, in
+    order, each equal to the per-row ``_encode_one`` (``n_vars`` ==
+    ``len(var_kinds)``); null texts give null in every column."""
+    got = _encode_batch(pd.Series(texts, dtype=object), mode, cols)
+    assert tuple(got.columns) == cols
     for i, t in enumerate(texts):
-        _, k, e, _ = _encode_one(t, mode)
-        assert got["var_kinds"][i] == k, (i, t)
-        assert got["encoded_vars"][i] == e, (i, t)
-
-
-@settings(max_examples=40, deadline=None)
-@given(texts=TEXTS)
-def test_logtype_nvars_batch_equals_encode_one(texts):
-    got = _logtype_nvars_batch(pd.Series(texts, dtype=object))
-    for i, t in enumerate(texts):
-        lt, k, _, _ = _encode_one(t)
-        if t is None:
-            assert got["logtype"][i] is None
-            assert pd.isna(got["n_vars"][i])
-            continue
-        assert got["logtype"][i] == lt, (i, t)
-        assert int(got["n_vars"][i]) == len(k), (i, t)
+        lt, k, e, d = _encode_one(t, mode)
+        want = {
+            "logtype": lt,
+            "var_kinds": k,
+            "encoded_vars": e,
+            "dict_vars": d,
+            "n_vars": None if k is None else len(k),
+        }
+        for c in cols:
+            v = got[c][i]
+            if want[c] is None:
+                assert v is None or v is pd.NA, (c, i, t)
+            else:
+                assert v == want[c], (c, i, t)

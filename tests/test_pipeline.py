@@ -1,6 +1,6 @@
 """Pipeline-level tests: routing counts vs pandas oracle, level mapping,
-chunking invariants, ordering under salting, resume idempotence
-(SURVEY.md §5 list)."""
+chunking invariants (incl. per-conversation (conv_id, turn_idx) order),
+resume idempotence (SURVEY.md §5 list)."""
 
 import os
 
@@ -17,9 +17,7 @@ from fluent_bit_clp_spark.functions.levels import (
 from fluent_bit_clp_spark.operators.chunk import (
     assign_chunks,
     assign_chunks_single_window,
-    with_row_bytes,
 )
-from fluent_bit_clp_spark.operators.route import salted_repartition
 from fluent_bit_clp_spark.plans.pipeline import encode_pipeline, run_to_sinks
 
 
@@ -135,22 +133,6 @@ def test_huge_turn_forces_bin_boundary(spark):
     enc = encode_pipeline(df, spark)
     rows = {r.turn_idx: r.ir_bin_id for r in enc.select("turn_idx", "ir_bin_id").collect()}
     assert rows[0] == 0 and rows[1] >= 1
-
-
-def test_order_restored_under_salting(spark, tiny):
-    """(conv_id, turn_idx) ordering inside salted partitions (R4/M3)."""
-    salted = salted_repartition(with_row_bytes(tiny), 16, split_turns=64)
-
-    def check(it):
-        prev = None
-        for row in it:
-            key = (row.conv_id, row.turn_idx)
-            if prev is not None and prev[0] == key[0]:
-                assert prev[1] < key[1]
-            prev = key
-        return iter([])
-
-    salted.rdd.mapPartitions(lambda it: check(it)).count()
 
 
 def test_datagen_deterministic_across_parallelism(spark):
